@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan for declared queries.
   * Usage: runMain graft.Explain [sfDir] [queryName ...] (default: all).
   * Set GRAFT_NO_BROADCAST=1 to disable auto-broadcast — shows the plan
@@ -12,13 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (sys.env.get("GRAFT_NO_BROADCAST").contains("1"))
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

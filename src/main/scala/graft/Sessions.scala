@@ -3,15 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE session configuration shared by every driver-facing main
-  * (Bench, Verify) — so the configuration under which performance is
-  * MEASURED is the configuration under which correctness is VERIFIED and
-  * the library deploys (VERDICT r12 "What's wrong" #2: a session config
+  * (Bench, Verify, ScaleUp, Explain, PlanAudit) and the test suite — so
+  * the configuration under which performance is MEASURED is the
+  * configuration under which correctness is VERIFIED and the library
+  * deploys (VERDICT r12 "What's wrong" #2: a session config
   * living only in the timing harness is how config-twiddle gaming
   * starts).
   *
   * Every entry is semantics-neutral (execution strategy only) and
-  * scale-parameterised: `cpus` comes from `$SPARK_GRAFT_CPUS` at the call
-  * sites, never a constant.
+  * scale-parameterised: `cpus` comes from `$SPARK_GRAFT_CPUS` at the
+  * measuring call sites (Bench, Verify, ScaleUp); the tests (4) and the
+  * plan tools Explain (4) and PlanAudit (8) pin small fixed counts.
   */
 object Sessions {
 

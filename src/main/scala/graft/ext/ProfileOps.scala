@@ -72,15 +72,12 @@ object ProfileOps {
     * shuffles of the distinct-value frame (≤ distinct values × groups
     * rows — for integral profile columns, orders of magnitude below row
     * count). Memory stays bounded for ANY value domain: the distinct
-    * frame still range-partitions, never a per-group window. `tieCol` is
-    * retained for API stability; the value-only construction no longer
-    * consumes it. NULL values rank first (ascending NULLS FIRST), NULL
-    * group values profile together (null-safe `<=>` joins) — both as
-    * before.
+    * frame still range-partitions, never a per-group window. NULL values
+    * rank first (ascending NULLS FIRST), NULL group values profile
+    * together (null-safe `<=>` joins) — both as before.
     *
     * Output: (`groupCol`, med, mad) ordered by the group. */
-  def groupedMad(df: DataFrame, groupCol: String, valCol: String,
-      tieCol: String): DataFrame = {
+  def groupedMad(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val vcounts = df.select(col(groupCol), col(valCol).as("__v"))
       .groupBy(col(groupCol), col("__v")).agg(count(lit(1)).as("__c"))
       .localCheckpoint() // ONE scan of df serves n + both median passes
@@ -156,7 +153,7 @@ object ProfileOps {
   def robustOutliers(df: DataFrame, groupCol: String, valCol: String,
       idCol: String, zTenths: Int = 35): DataFrame = {
     require(zTenths > 0)
-    val stats = groupedMad(df, groupCol, valCol, idCol)
+    val stats = groupedMad(df, groupCol, valCol)
     df.select(col(groupCol), col(idCol), col(valCol))
       .join(broadcast(stats.withColumnRenamed(groupCol, "__gm")),
         col(groupCol) <=> col("__gm"))

@@ -34,9 +34,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * murmur) cannot. A deployment free of the cross-engine constraint can
   * swap in xxhash64 rows for cheaper updates; the structure is unchanged.
   *
-  * Scale shape: `TypedImperativeAggregate` like the KLL/Theta/KMV lane —
-  * the live `long[depth × width]` array is the buffer (16 KiB at 4×512),
-  * serialized only at shuffle boundaries, map-side combinable. */
+  * Scale shape: `TypedImperativeAggregate` like the KMV lane and
+  * Spark's builtin KLL/Theta aggregates — the live `long[depth × width]`
+  * array is the buffer (16 KiB at 4×512), serialized only at shuffle
+  * boundaries, map-side combinable. */
 object CmsAlgo {
 
   private val md5 = new ThreadLocal[MessageDigest] {

@@ -84,8 +84,6 @@ object GraftExtensions {
   // lazy: referenced from `functions` above during object init.
   private lazy val dialectFunctions: Seq[
       (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    dialectEntry("zeroifnull", 1)(a => delegate("coalesce")(Seq(a.head, Literal(0)))),
-    dialectEntry("nullifzero", 1)(a => delegate("nullif")(Seq(a.head, Literal(0)))),
     dialectEntry("hash_md5", 1)(delegate("md5")),
     dialectEntry("hash_sha1", 1)(delegate("sha1")),
     dialectEntry("hash_sha256", 1)(a => delegate("sha2")(Seq(a.head, Literal(256)))),
@@ -127,25 +125,14 @@ object GraftExtensions {
     // codegen expression, DuckDB-compatible parameterization.
     dialectEntry("jaro_winkler", 2)(a =>
       JaroWinklerSimilarity(a.head, a(1))),
-    // KLL mergeable quantile sketches (the quantile sibling of Spark's
-    // builtin hll_* lane): build / merge / extract. The analyzer wraps
-    // the returned AggregateFunctions itself.
-    dialectEntry("kll_sketch_agg", 1)(a => KllSketchAgg(a.head, 200)),
-    dialectEntry("kll_merge_agg", 1)(a => KllMergeAgg(a.head, 200)),
-    dialectEntry("kll_quantile", 2)(a => KllQuantile(a.head, a(1))),
-    // Deterministic log-bucket quantile histograms (DDSketch family) —
-    // same build/merge/extract triple, merge-order-independent. The agg
+    // Deterministic log-bucket quantile histograms (DDSketch family):
+    // build / merge / extract, merge-order-independent. The agg
     // spellings are variadic (optional alpha literal, default 0.005) —
-    // see variadicDialectFunctions below.
+    // see variadicDialectFunctions below. ZEROIFNULL / NULLIFZERO and
+    // the KLL / Theta sketch lanes are Spark builtins and are not
+    // registered here.
     dialectEntry("log_hist_quantile", 2)(a =>
-      LogHistQuantile(a.head, a(1))),
-    // Theta sketches — the set-operation member of the sketch lane
-    // (intersection estimates, which HLL cannot do).
-    dialectEntry("theta_sketch_agg", 1)(a => ThetaSketchAgg(a.head)),
-    dialectEntry("theta_merge_agg", 1)(a => ThetaMergeAgg(a.head)),
-    dialectEntry("theta_estimate", 1)(a => ThetaEstimate(a.head)),
-    dialectEntry("theta_intersect_estimate", 2)(a =>
-      ThetaIntersectEstimate(a.head, a(1)))) ++
+      LogHistQuantile(a.head, a(1)))) ++
       variadicDialectFunctions
 
   // Variadic Exasol functions that SHADOW a Spark builtin of the same name:
@@ -246,9 +233,10 @@ object GraftExtensions {
     *
     * The `instr`/`trunc`/`to_number` entries deliberately shadow builtin
     * registry entries (with builtin behavior preserved on the overlapping
-    * arities), and SimpleFunctionRegistry WARNs on every replacement —
-    * noise on each session init, so the registry logger is raised to ERROR
-    * for the registration call only. */
+    * arities); no other entry may shadow a builtin (GraftExtensionsSpec
+    * pins the allow-list). SimpleFunctionRegistry WARNs on every
+    * replacement — noise on each session init, so the registry logger is
+    * raised to ERROR for the registration call only. */
   def register(spark: SparkSession): Unit =
     if (!spark.catalog.functionExists("simhash64")) {
       val registryLogger =

@@ -31,12 +31,13 @@ import org.apache.spark.sql.types._
   * immaterial against the ~1/√(k−2) sketch error, and in any case
   * identical on both engines.
   *
-  * Scale shape: `TypedImperativeAggregate` like the KLL/Theta lane —
-  * the live TreeSet is the buffer (≤ k longs, ~8 KiB at k = 1024),
-  * serialized only at shuffle boundaries, map-side combinable; history
-  * is never rescanned. Reference evidence: exasol/etl-utils forwards
-  * all SQL to the host engine (query_wrapper.sql:40); this is the
-  * 100 TB scale path for its COUNT(DISTINCT) surface. */
+  * Scale shape: `TypedImperativeAggregate` like Spark's builtin
+  * KLL/Theta aggregates — the live TreeSet is the buffer (≤ k longs,
+  * ~8 KiB at k = 1024), serialized only at shuffle boundaries, map-side
+  * combinable; history is never rescanned. Reference evidence:
+  * exasol/etl-utils forwards all SQL to the host engine
+  * (query_wrapper.sql:40); this is the 100 TB scale path for its
+  * COUNT(DISTINCT) surface. */
 final case class KmvDistinctAgg(
     child: Expression,
     k: Int,
@@ -118,9 +119,10 @@ final case class KmvDistinctAgg(
   * arithmetic). Evaluating to the sample keeps every SET OPERATION
   * SQL-expressible — the aggregate only maintains bottom-k state, so a
   * DuckDB oracle rebuilds the whole pipeline verbatim (`ORDER BY h
-  * LIMIT k` lists + LIST_INTERSECT/LIST_FILTER), unlike the
-  * DataSketches theta lane ([[ThetaSketchAgg]] — engine-private murmur
-  * re-hash + randomized resize), which stays the library engine for
+  * LIMIT k` lists + LIST_INTERSECT/LIST_FILTER), unlike Spark's
+  * builtin DataSketches theta lane (`theta_sketch_agg` /
+  * `theta_union_agg` / `theta_intersection` / `theta_sketch_estimate`
+  * — engine-private murmur re-hash + randomized resize), the engine for
   * pre-serialized sketch stores. Same ≤k-long TreeSet buffer, same
   * map-side-combinable merge, same NULL-skipping input contract. */
 final case class KmvSampleAgg(

@@ -21,15 +21,17 @@ import org.apache.spark.sql.types._
   * quantile. Negative values mirror into odd-encoded buckets, zero has
   * a dedicated bucket, non-finite inputs are ignored like NULLs.
   *
-  * Why this exists next to [[KllSketchAgg]]: the KLL sketch's
-  * compaction is RANDOMIZED (and DataSketches draws from a
-  * thread-shared Random), so two runs produce different — though both
-  * rank-correct — estimates; it is the one documented exception in the
-  * repo's bit-identity contract (BASELINE.md). This histogram's merge
-  * is pure bucket-count ADDITION: a commutative monoid, so the result
-  * is independent of partitioning, merge order, and thread
-  * interleaving — bit-deterministic by construction, not by test. The
-  * trade is bucket count growing with the value-domain's log-width
+  * Why this exists next to Spark's builtin KLL lane
+  * (`kll_sketch_agg_double` / `kll_merge_agg_double` /
+  * `kll_sketch_get_quantile_double`): the KLL sketch's compaction is
+  * RANDOMIZED (and DataSketches draws from a thread-shared Random), so
+  * two runs produce different — though both rank-correct — estimates,
+  * which the repo's bit-identity contract (BASELINE.md) cannot accept
+  * for a declared query. This histogram's merge is pure bucket-count
+  * ADDITION: a commutative monoid, so the result is independent of
+  * partitioning, merge order, and thread interleaving —
+  * bit-deterministic by construction, not by test. The trade is bucket
+  * count growing with the value-domain's log-width
   * (≈461·decades at α = 0.5%; ~2.8 KB per 50-decade sketch) instead of
   * KLL's fixed k — the right trade for ETL metric columns, which span
   * few decades. Serialization is canonical (buckets sorted by id), so
@@ -275,4 +277,21 @@ final case class LogHistQuantile(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): LogHistQuantile =
     copy(left = newLeft, right = newRight)
+}
+
+/** Column-API entry points for the log-hist sketch lane. */
+object SketchFunctions {
+  /** Default α=0.005: ≤0.5% relative error per quantile, deterministic
+    * (merge = bucket addition — see [[graft.functions.LogHist]]). */
+  def logHistAgg(c: Column, alpha: Double = 0.005): Column =
+    Bridge.column(
+      LogHistAgg(Bridge.expression(c), alpha).toAggregateExpression())
+
+  def logHistMerge(c: Column, alpha: Double = 0.005): Column =
+    Bridge.column(
+      LogHistMergeAgg(Bridge.expression(c), alpha).toAggregateExpression())
+
+  def logHistQuantile(sketch: Column, rank: Column): Column =
+    Bridge.column(
+      LogHistQuantile(Bridge.expression(sketch), Bridge.expression(rank)))
 }

@@ -3427,8 +3427,7 @@ object Queries {
     * MEDIAN interpolates; the oracle spells ROW_NUMBER like the Spark
     * side). Ranks from the bounded-memory two-phase group rank. */
   private def q106(s: SparkSession, d: String): DataFrame =
-    graft.ext.ProfileOps.groupedMad(
-      t(s, d, "documents"), "source", "n_chars", "doc_id")
+    graft.ext.ProfileOps.groupedMad(t(s, d, "documents"), "source", "n_chars")
 
   private val q106Sql =
     """WITH r AS (
@@ -6191,17 +6190,18 @@ object Queries {
     * bit-identical under ANY partitioning or merge order. r10-late
     * this replaced the DataSketches KLL rollup here: KLL's randomized
     * compaction (thread-shared Random) made q161 the one declared
-    * query outside the two-run bit-identity contract; the KLL lane
-    * stays in the library ([[graft.functions.KllSketchAgg]],
-    * KllSketchSpec) for fixed-size-bound use cases. Because the bucket
-    * map is a pure integer function of the data (`bucket = ⌈log_γ v⌉`,
-    * estimate = bucket midpoint, quantile = a cumulative walk), DuckDB
-    * rebuilds the WHOLE sketch in SQL — the same flip q182 made for
-    * Count-Min — so since r11 this row is driver-hash-checked, not
-    * just spec-pinned. Outputs are [[round6]]-rounded on both engines:
-    * `ln`/`pow` are the lane's only non-IEEE-identical ops (≤2 ulp
-    * apart between libms), and 6dp absorbs that while staying far
-    * inside the α = 0.5% accuracy contract that QueriesSpec pins. */
+    * query outside the two-run bit-identity contract; Spark's builtin
+    * KLL lane (`kll_sketch_agg_double` / `kll_merge_agg_double` /
+    * `kll_sketch_get_quantile_double`) serves fixed-size-bound use
+    * cases. Because the bucket map is a pure integer function of the
+    * data (`bucket = ⌈log_γ v⌉`, estimate = bucket midpoint, quantile =
+    * a cumulative walk), DuckDB rebuilds the WHOLE sketch in SQL — the
+    * same flip q182 made for Count-Min — so since r11 this row is
+    * DuckDB-oracle hash-checked, not just spec-pinned. Outputs are
+    * [[round6]]-rounded on both engines: `ln`/`pow` are the lane's only
+    * non-IEEE-identical ops (≤2 ulp apart between libms), and 6dp
+    * absorbs that while staying far inside the α = 0.5% accuracy
+    * contract that QueriesSpec pins. */
   private def q161(s: SparkSession, d: String): DataFrame = {
     import graft.functions.SketchFunctions._
     val daily = t(s, d, "events")
@@ -6287,10 +6287,10 @@ object Queries {
     * division, so the whole row is deterministic and DuckDB rebuilds
     * it verbatim (bottom-k lists + LIST_INTERSECT/LIST_FILTER +
     * HUGEINT division): a driver-hash oracle since r11, on top of the
-    * QueriesSpec pin against the exact shingle-set Jaccard. The
-    * DataSketches theta lane ([[graft.functions.ThetaSketchAgg]],
-    * ThetaSketchSpec) stays the library engine for pre-serialized
-    * sketch stores. */
+    * QueriesSpec pin against the exact shingle-set Jaccard. Spark's
+    * builtin DataSketches theta lane (`theta_sketch_agg` /
+    * `theta_union_agg` / `theta_intersection` / `theta_sketch_estimate`)
+    * is the engine for pre-serialized sketch stores. */
   private def q162(s: SparkSession, d: String): DataFrame = {
     import graft.functions.HashFunctions._
     val k = 1024
@@ -7432,9 +7432,9 @@ object Queries {
     * score against the broadcast 1-row sketch. The portable md5-row
     * hashes make the whole counter matrix engine-reproducible, so the
     * estimates hash-match the DuckDB oracle — the sketch lane's first
-    * fully oracle-checked member (HLL/KLL/Theta are spec-pinned only).
-    * `exact_cnt` rides along, pinning the CMS ≥-true-count guarantee in
-    * data as well as in CountMinSpec. */
+    * fully oracle-checked member (Spark's builtin HLL/KLL/Theta sketches
+    * are not engine-reproducible). `exact_cnt` rides along, pinning the
+    * CMS ≥-true-count guarantee in data as well as in CountMinSpec. */
   private def q182(s: SparkSession, d: String): DataFrame = {
     import graft.functions.CountMin.{cmsEstimate, cmsSketch}
     val li = t(s, d, "lineitem")

@@ -1280,27 +1280,50 @@ object SqlCompat {
       if (m.group(1) != null) (whereKw.end + m.start, whereKw.end + m.end(3))
       else (whereKw.end + m.start,
         whereKw.end + (if (m.group(4) != null) m.end(4) else m.end(3)))
-    val restOfWhere =
-      (sql.substring(whereKw.end, cutStart) + sql.substring(cutEnd, whereEnd))
-        .trim
+    // The connector's `\s+` also runs over the literals, comments and
+    // parameters the masked view blanks to spaces: put those tokens back,
+    // so the cut consumes only the conjunct and real whitespace.
+    val kept = maskedTokens(sql, cutStart, cutEnd)
+    val restOfWhere = (sql.substring(whereKw.end, cutStart) +
+      (if (kept.isEmpty) "" else kept.map(endLine).mkString(" ", " ", " ")) +
+      sql.substring(cutEnd, whereEnd)).trim
     val beforeWhere = sql.substring(0, whereKw.start)
     val afterWhere = sql.substring(whereEnd, end)
-    val core =
-      (if (restOfWhere.isEmpty) beforeWhere.replaceAll("\\s+$", "")
-       else s"${beforeWhere}WHERE $restOfWhere") + " " + afterWhere.trim
+    val head = endLine(
+      if (restOfWhere.isEmpty) beforeWhere.replaceAll("\\s+$", "")
+      else s"${beforeWhere}WHERE $restOfWhere")
     val orderBy = OrderByKwRe.findFirstMatchIn(masked.substring(whereKw.end))
       .map(whereKw.end + _.start)
     Some(orderBy match {
       case Some(ob) =>
-        val inner =
-          (if (restOfWhere.isEmpty) beforeWhere.replaceAll("\\s+$", "")
-           else s"${beforeWhere}WHERE $restOfWhere") + " " +
-            sql.substring(whereEnd, ob).trim
+        val inner = (head + " " + sql.substring(whereEnd, ob).trim).trim
         val obClause = sql.substring(ob, end).trim
-        s"SELECT * FROM (${inner.trim} LIMIT $n) __graft_rn $obClause"
-      case None => s"${core.trim} LIMIT $n"
+        s"SELECT * FROM (${endLine(inner)} LIMIT $n) __graft_rn $obClause"
+      case None => s"${endLine((head + " " + afterWhere.trim).trim)} LIMIT $n"
     })
   }
+
+  /** The tokens of `sql` in [from, until) that [[maskNonTopLevel]] blanks
+    * at top level: string literals, comments and parameters. */
+  private def maskedTokens(sql: String, from: Int, until: Int): Seq[String] = {
+    var at = 0
+    SqlTokens.tokenize(sql).flatMap { t =>
+      val start = at
+      at += t.text.length
+      val blanked = t.kind != SqlTokens.Other &&
+        t.kind != SqlTokens.QuotedIdent
+      if (blanked && start >= from && at <= until) Some(t.text) else None
+    }
+  }
+
+  /** `s` followed by a newline when it ends in a `--` comment, so text
+    * appended after it is not commented out. */
+  private def endLine(s: String): String =
+    SqlTokens.tokenize(s).lastOption match {
+      case Some(SqlTokens.Token(SqlTokens.Comment, c)) if c.startsWith("--") =>
+        s + "\n"
+      case _ => s
+    }
 
   private val SelectRownumItemRe =
     "(?is)(^|,)(\\s*)rownum(\\s+as\\s+[\\w`]+|\\s+[\\w`]+)?\\s*(?=,|$)".r

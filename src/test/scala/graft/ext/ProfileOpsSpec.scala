@@ -59,7 +59,7 @@ class ProfileOpsSpec extends AnyFunSuite with SparkTestBase {
       ("g2", 5L, 5L), ("g2", 5L, 6L), ("g2", 9L, 7L),
       (null.asInstanceOf[String], 10L, 8L), (null, 2L, 9L)
     ).toDF("src", "v", "id")
-    val out = ProfileOps.groupedMad(df, "src", "v", "id").collect()
+    val out = ProfileOps.groupedMad(df, "src", "v").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     // g1 (n=4, rank 2): med 3; |v-3| = [2,0,4,17] → sorted rank 2 → 2.
     // g2 (n=3, rank 2): med 5; |v-5| = [0,0,4] → rank 2 → 0.
@@ -83,7 +83,7 @@ class ProfileOpsSpec extends AnyFunSuite with SparkTestBase {
     val uw = df.withColumn("one", lit(1))
     val viaW = ProfileOps.weightedMedian(uw, "src", "v", "one", "id")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val viaMad = ProfileOps.groupedMad(df, "src", "v", "id")
+    val viaMad = ProfileOps.groupedMad(df, "src", "v")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(viaW == viaMad)
   }

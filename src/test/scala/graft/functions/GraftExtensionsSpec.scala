@@ -197,10 +197,31 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
     new GraftExtensions().apply(ext)
     val names =
       org.apache.spark.sql.graftbridge.Bridge.injectedFunctionNames(ext)
-    val expected = Set("minhash_signature", "simhash64", "array_dot", "zeroifnull",
-      "nullifzero", "hash_md5", "hash_sha1", "hash_sha256", "edit_distance",
+    val expected = Set("minhash_signature", "simhash64", "array_dot",
+      "hash_md5", "hash_sha1", "hash_sha256", "edit_distance",
       "add_days", "add_hours", "add_minutes", "add_seconds", "add_weeks",
       "add_years", "seconds_between", "days_between")
     assert(expected.subsetOf(names.toSet), s"missing: ${expected -- names.toSet}")
+  }
+
+  test("registration never shadows a Spark builtin outside the allow-list") {
+    // instr / trunc / to_number add Exasol arities on top of the builtin
+    // and keep its expression on the shared ones; every other extension
+    // name must be new to the registry (check-before-inject).
+    val allowed = Set("instr", "trunc", "to_number")
+    val builtin =
+      org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+    val shadowed = GraftExtensions.functions.map(_._1)
+      .filter(builtin.functionExists).map(_.funcName).toSet -- allowed
+    assert(shadowed.isEmpty,
+      s"extensions replace Spark builtins: ${shadowed.toSeq.sorted.mkString(", ")}")
+
+    GraftExtensions.register(spark)
+    val described = spark.sql("DESCRIBE FUNCTION theta_sketch_agg")
+      .collect().map(_.getString(0)).mkString("\n")
+    assert(described.contains(
+      "Class: org.apache.spark.sql.catalyst.expressions.aggregate.ThetaSketchAgg"),
+      described)
+    assert(!described.contains(classOf[GraftExtensions].getName), described)
   }
 }

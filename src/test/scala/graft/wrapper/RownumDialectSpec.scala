@@ -28,6 +28,23 @@ class RownumDialectSpec extends AnyFunSuite with SparkTestBase {
     assert(SqlCompat.translateRownum(
       "SELECT a FROM t WHERE ROWNUM <= 5 AND x > 1 AND y = 2").get ==
       "SELECT a FROM t WHERE x > 1 AND y = 2 LIMIT 5")
+    // the masked view blanks literals and comments to spaces, but the cut
+    // consumes only what is whitespace in the original: a literal or
+    // comment beside the AND connector stays
+    assert(SqlCompat.translateRownum(
+      "SELECT a FROM t WHERE s = 'F' AND ROWNUM <= 25").get ==
+      "SELECT a FROM t WHERE s = 'F' LIMIT 25")
+    assert(SqlCompat.translateRownum(
+      "SELECT a FROM t WHERE ROWNUM <= 25 AND 'F' = s").get ==
+      "SELECT a FROM t WHERE 'F' = s LIMIT 25")
+    assert(SqlCompat.translateRownum(
+      "SELECT a FROM t WHERE s = 'F' /* open only */ AND ROWNUM <= 25").get ==
+      "SELECT a FROM t WHERE s = 'F' /* open only */ LIMIT 25")
+    // a kept line comment still ends at a newline, so nothing after it
+    // is commented out
+    assert(SqlCompat.translateRownum(
+      "SELECT a FROM t WHERE ROWNUM <= 25 AND -- open only\n'F' = s").get ==
+      "SELECT a FROM t WHERE -- open only\n 'F' = s LIMIT 25")
     // ORDER BY present → the host numbers rows BEFORE the sort, so the
     // limit wraps an inner subquery and the sort moves outside
     assert(SqlCompat.translateRownum(
@@ -138,6 +155,12 @@ class RownumDialectSpec extends AnyFunSuite with SparkTestBase {
     val (ok, res) = w.query("SELECT v FROM rn_t WHERE ROWNUM <= 3")
     assert(ok, res.errorMessage)
     assert(res.dataFrame.get.count() == 3)
+    // a literal before the connector survives the cut
+    val (okLit, resLit) = w.query(
+      "SELECT v FROM rn_t WHERE CAST(v AS STRING) > '2' AND ROWNUM <= 25")
+    assert(okLit, resLit.errorMessage)
+    assert(resLit.dataFrame.get.collect().map(_.getInt(0)).toSet ==
+      Set(3, 4, 5))
     val (ok2, res2) = w.query(
       "SELECT v FROM rn_t WHERE v >= 2 AND ROWNUM <= 2 ORDER BY v DESC")
     assert(ok2, res2.errorMessage)
