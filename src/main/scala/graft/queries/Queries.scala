@@ -5688,8 +5688,9 @@ object Queries {
   // ------------------------------------------------ q130 ASOF JOIN dialect
 
   /** The r9 `ASOF JOIN` dialect spelling, driven end-to-end: the DuckDB-
-    * grammar statement goes through `SqlCompat.parseAsOf/runAsOf` onto the
-    * single-shuffle union+window as-of operator, and the ORACLE is DuckDB's
+    * grammar statement goes through `SqlCompat.parseAsOf` and the parsed
+    * statement's `run` onto the single-shuffle union+window as-of
+    * operator, and the ORACLE is DuckDB's
     * own native ASOF JOIN — engine-vs-engine on identical declarative text,
     * not an emulation compared against itself. Each event matches the
     * latest purchase-aggregate at-or-before its timestamp for the same
@@ -5703,12 +5704,12 @@ object Queries {
     // timestamps leave as integer micros (§7.6 determinism rule: raw
     // timestamp outputs write INT96 → ns-typed parquet, dtype-mismatching
     // the oracle's µs arrow output even when values agree)
-    graft.wrapper.SqlCompat.runAsOf(s, graft.wrapper.SqlCompat.parseAsOf(
+    graft.wrapper.SqlCompat.parseAsOf(
       """SELECT a.event_id, a.user_id, unix_micros(a.ts) AS ts_us,
         |       unix_micros(b.ts) AS pts_us, b.pval
         |FROM ev_asof_l a ASOF JOIN ev_asof_r b
         |ON a.user_id = b.user_id AND a.ts >= b.ts
-        |ORDER BY a.event_id""".stripMargin).get)
+        |ORDER BY a.event_id""".stripMargin).get.run(s).df.get
   }
 
   private val q130Sql =

@@ -173,7 +173,7 @@ final class DurableCatalog(
       if (ScriptRegistry.lookup(name).isEmpty)
         SqlCompat.parseCreateScript(r.getString(1)).foreach { cs =>
           ScriptRegistry.register(name,
-            ScriptRegistry.Script(SqlCompat.scriptStepsFor(cs)))
+            ScriptRegistry.Script(SqlCompat.scriptSteps(cs)))
         }
     }
     connections.collect().foreach { r =>

@@ -50,58 +50,6 @@ object Params {
     }.mkString
   }
 
-  /** Native-parser identifier binding — the Spark ≥4 alternative to the
-    * pre-parse splice: rewrites `::NAME` occurrences, including dotted runs
-    * `::SCH.::TAB`, into `IDENTIFIER(:__graft_idN)` clauses whose bound
-    * value is the backtick-quoted (multi-part) name, so nested-quoting edge
-    * cases are resolved by the SQL PARSER rather than by text splicing.
-    * Occurrences that MIX a parameter part with a literal part (`::SCH.tab`,
-    * `sch.::TAB`) keep the proven text splice for that occurrence —
-    * `IDENTIFIER` cannot name a partial qualifier. Returns the rewritten
-    * SQL plus the extra value bindings to hand to `spark.sql`. */
-  def nativeIdentifiers(sql: String, params: Map[String, Any])
-      : (String, Map[String, String]) = {
-    val byUpper = params.map { case (k, v) => k.toUpperCase -> v }
-    def resolve(name: String): String = byUpper.get(name.toUpperCase) match {
-      case Some(v) => String.valueOf(v)
-      case None => throw new IllegalArgumentException(
-        s"identifier parameter ::$name is not bound")
-    }
-    val toks = SqlTokens.tokenize(sql).toVector
-    val out = new StringBuilder
-    val extra = scala.collection.mutable.LinkedHashMap[String, String]()
-    def isIdentParam(j: Int): Boolean =
-      j < toks.length && toks(j).kind == SqlTokens.IdentParam
-    def mixedAfter(j: Int): Boolean =
-      j < toks.length && ((toks(j).kind == SqlTokens.Other &&
-        toks(j).text.matches("(?s)^\\.[A-Za-z_].*")) ||
-        (toks(j).kind == SqlTokens.Other && toks(j).text == "." &&
-          j + 1 < toks.length && toks(j + 1).kind == SqlTokens.QuotedIdent))
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      if (t.kind == SqlTokens.IdentParam) {
-        val parts = scala.collection.mutable.ArrayBuffer(t.text.drop(2))
-        var j = i + 1
-        while (j + 1 < toks.length && toks(j).kind == SqlTokens.Other &&
-            toks(j).text == "." && isIdentParam(j + 1)) {
-          parts += toks(j + 1).text.drop(2); j += 2
-        }
-        val mixedBefore =
-          out.toString.matches("(?s).*[A-Za-z0-9_`\"]\\.$")
-        if (mixedBefore || mixedAfter(j)) {
-          out ++= parts.map(p => quote(resolve(p))).mkString(".")
-        } else {
-          val key = s"__graft_id${extra.size}"
-          extra(key) = parts.map(p => quote(resolve(p))).mkString(".")
-          out ++= s"IDENTIFIER(:$key)"
-        }
-        i = j
-      } else { out ++= t.text; i += 1 }
-    }
-    (out.toString, extra.toMap)
-  }
-
   /** Names of `:NAME` value parameters referenced in the SQL (outside
     * literals/comments), after identifier splice. Lets the wrapper bind only
     * the params a statement actually uses. */

@@ -59,9 +59,16 @@ final class PreparedStatement(
     * Divergences from the per-row path, by construction of the string
     * binding: a BINARY target column would receive the bytes of the
     * array's `toString` — so any bound BinaryType column falls back to
-    * per-row [[execute]] — and (with ANSI mode off) a malformed
-    * numeric/timestamp cell becomes NULL in the batch instead of failing
-    * its row the way `execute` would. */
+    * per-row [[execute]] — and a malformed numeric/timestamp cell fails
+    * the whole batch (Spark's default ANSI cast raises; with ANSI mode
+    * off the cell becomes NULL instead) where `execute` would fail only
+    * its row.
+    *
+    * Success and failure go through the wrapper's one protocol
+    * ([[QueryWrapper.settle]]): the statement logs as
+    * `batch insert: <sql>`, and a failure follows `on_error`. A failed
+    * batch is not retried per row: the append may have committed nothing
+    * or everything, so per-row replay could double-insert. */
   def executeBatch(
       values: Seq[Seq[Any]],
       options: QueryOptions = QueryOptions()): (Boolean, Vector[QueryResult]) = {
@@ -98,7 +105,7 @@ final class PreparedStatement(
     batchable match {
       case None => execute(values, options = options)
       case Some((table, bindings)) =>
-        scala.util.Try {
+        val attempt = scala.util.Try {
           val tgtSchema = spark.table(table).schema
           val strSchema = StructType(
             bindings.map { case (n, _) => StructField(n, StringType) })
@@ -117,28 +124,11 @@ final class PreparedStatement(
             else lit(null).cast(f.dataType).as(f.name)
           }.toSeq: _*)
           full.write.mode("append").insertInto(table)
-          values.length.toLong
-        } match {
-          case scala.util.Success(n) =>
-            if (options.logging)
-              wrapper.log("INFO", s"batch insert: $sqlText", Some(n))
-            (true, Vector(new QueryResult(sqlText, None, Some(n), None)))
-          case scala.util.Failure(e) =>
-            // Mirror wrapper.query's failure protocol (INFO + ERROR log,
-            // on_error policy) without retrying per-row: a failed batch
-            // append may have committed nothing or everything — per-row
-            // replay here could double-insert.
-            val msg = Option(e.getMessage).getOrElse(e.toString)
-            wrapper.log("INFO", sqlText)
-            wrapper.log("ERROR", msg)
-            if (wrapper.onError == "abort" || wrapper.onError == "rollback") {
-              wrapper.finish(rollback = wrapper.onError == "rollback")
-              throw new QueryWrapperException(
-                msg + "\n Statement was: " + sqlText + "\n", e)
-            }
-            (false, Vector(QueryResult.failure(sqlText,
-              QueryError(e.getClass.getSimpleName, msg))))
+          new QueryResult(sqlText, None, Some(values.length.toLong), None)
         }
+        val (ok, res) = wrapper.settle(sqlText, attempt, options.logging,
+          logPrefix = "batch insert: ")
+        (ok, Vector(res))
     }
   }
 }

@@ -70,12 +70,6 @@ final class QueryWrapper private (
   var verbosity: Int = 2
   /** `on_error` (QW:417): abort (no rollback) | rollback | continue. */
   var onError: String = "abort"
-  /** `::NAME` identifier-parameter binding mode: "splice" (default —
-    * pre-parse text splice, required when the statement is handled by a
-    * dialect emulation layer whose parser must see the final name) or
-    * "native" (Spark ≥4 `IDENTIFIER()` clause — quoting and nesting edge
-    * cases resolve in the SQL parser, [[Params.nativeIdentifiers]]). */
-  var identifierBinding: String = "splice"
   var errors: Int = 0
   var runId: Option[Long] = None
 
@@ -117,15 +111,13 @@ final class QueryWrapper private (
   private val OpenSchemaRe = "(?is)^\\s*open\\s+schema\\s+(\\S+)\\s*$".r
 
   /** THE pass-through (reference `wrap_query`, QW:38–68): splice `::x`
-    * identifier params, bind `:x` value params, execute via `spark.sql`;
-    * on failure log INFO(statement) + ERROR(message) and apply the
-    * `on_error` policy (abort/rollback finish first, then raise — QW:44–48);
-    * on success auto-log at verbosity ≥2 with the normalized rowcount. */
+    * identifier params, bind `:x` value params, execute via `spark.sql`
+    * (or the SqlCompat emulation), then [[settle]] the outcome. */
   def query(sqlText: String,
       options: QueryOptions = QueryOptions()): (Boolean, QueryResult) = {
     val params = options.params.getOrElse(queryParams.toMap)
     var stmtText = sqlText
-    Try {
+    val attempt = Try {
       // Script DDL is handled BEFORE param splicing: a CREATE SCRIPT
       // body's `:P`/`::P` references belong to the script's own EXECUTE-
       // time binding, not to this wrapper's current params (an unbound
@@ -133,19 +125,35 @@ final class QueryWrapper private (
       // freeze today's value into the body).
       if (SqlCompat.handleScriptDdl(sqlText, durableCatalog))
         QueryResult.empty(sqlText)
-      else if (identifierBinding == "native") {
-        val (rewritten, extra) = Params.nativeIdentifiers(sqlText, params)
-        stmtText = rewritten
-        execute(stmtText, params ++ extra)
-      } else {
+      else {
         stmtText = Params.spliceIdentifiers(sqlText, params)
-        execute(stmtText, params)
+        val res = execute(stmtText, params)
+        // Force the rowcount here so RUNTIME failures (not just analysis
+        // errors) hit the error path — `pquery` materializes eagerly, so
+        // its failures are always query failures (QW:41). For a query this
+        // is a distributed count: no rows cross to the driver.
+        res.normalizedRowCount
+        res
       }
-    } match {
+    }
+    settle(stmtText, attempt, options.logging)
+  }
+
+  /** The result-and-failure protocol every wrapper statement ends in
+    * (QW:41–66), [[query]]'s and [[PreparedStatement.executeBatch]]'s
+    * alike. On success auto-log `logPrefix + stmtText` at verbosity ≥2
+    * with the normalized rowcount (INFO at 2, DEBUG at ≥3). On failure log
+    * INFO(statement) + ERROR(message) and apply the `on_error` policy:
+    * abort/rollback finish first, then raise (QW:44–48) — except while
+    * `finish` itself runs. */
+  private[wrapper] def settle(stmtText: String, attempt: Try[QueryResult],
+      logging: Boolean, logPrefix: String = ""): (Boolean, QueryResult) =
+    attempt match {
       case Success(res) =>
-        if (options.logging) {
-          if (verbosity >= 3) log("DEBUG", stmtText, Some(res.normalizedRowCount))
-          else if (verbosity == 2) log("INFO", stmtText, Some(res.normalizedRowCount))
+        if (logging) {
+          val msg = logPrefix + stmtText
+          if (verbosity >= 3) log("DEBUG", msg, Some(res.normalizedRowCount))
+          else if (verbosity == 2) log("INFO", msg, Some(res.normalizedRowCount))
         }
         (true, res)
       case Failure(e) =>
@@ -159,6 +167,12 @@ final class QueryWrapper private (
         }
         (false, QueryResult.failure(stmtText, err))
     }
+
+  private object Emulated {
+    def unapply(stmt: String) = SqlCompat.classify(spark, stmt)
+  }
+  private object ScriptCall {
+    def unapply(stmt: String) = SqlCompat.scriptCall(stmt)
   }
 
   private def execute(stmt: String, params: Map[String, Any]): QueryResult =
@@ -171,137 +185,37 @@ final class QueryWrapper private (
         // B8: OPEN SCHEMA s → USE s.
         spark.sql(s"USE ${Params.quote(ident)}")
         QueryResult.empty(stmt)
-      case _ if SqlCompat.parseUpdate(stmt)
-          .exists(u => SqlCompat.canHandle(spark, u)) =>
-        // B4: UPDATE on a parquet catalog table — read-transform-overwrite
-        // (SqlCompat); rows_affected = matched rows, like the host engine.
-        val affected =
-          SqlCompat.runUpdate(spark, SqlCompat.parseUpdate(stmt).get)
-        new QueryResult(stmt, None, Some(affected), None)
-      case _ if SqlCompat.parseDelete(stmt)
-          .exists(del => SqlCompat.canHandle(spark, del)) =>
-        // DELETE, same emulation: keep-complement + overwrite.
-        val affected =
-          SqlCompat.runDelete(spark, SqlCompat.parseDelete(stmt).get)
-        new QueryResult(stmt, None, Some(affected), None)
-      case _ if SqlCompat.parseMerge(stmt)
-          .exists(mg => SqlCompat.canHandle(spark, mg)) =>
-        // MERGE (Exasol/ANSI upsert): one full-outer join pass, then the
-        // same verified checkpoint-overwrite as UPDATE/DELETE.
-        val affected =
-          SqlCompat.runMerge(spark, SqlCompat.parseMerge(stmt).get)
-        new QueryResult(stmt, None, Some(affected), None)
-      case _ if SqlCompat.parseImport(stmt)
-          .exists(im => SqlCompat.canHandle(spark, im)) =>
-        // Exasol IMPORT … FROM CSV: schema'd ingest with quarantine lane;
-        // rows_affected = loaded rows, quarantined count logged.
-        val (loaded, bad) =
-          SqlCompat.runImport(spark, SqlCompat.parseImport(stmt).get)
-        if (bad > 0) log("WARNING", s"IMPORT quarantined $bad malformed row(s)")
-        new QueryResult(stmt, None, Some(loaded), None)
-      case _ if SqlCompat.parseFbvImport(stmt)
-          .exists(fb => SqlCompat.canHandle(spark, fb)) =>
-        // Exasol IMPORT … FROM FBV (fixed-byte-value): fixed-width ingest
-        // through the same quarantine lane.
-        val (loaded, bad) =
-          SqlCompat.runFbvImport(spark, SqlCompat.parseFbvImport(stmt).get)
-        if (bad > 0) log("WARNING", s"IMPORT quarantined $bad malformed row(s)")
-        new QueryResult(stmt, None, Some(loaded), None)
-      case _ if SqlCompat.parseExport(stmt)
-          .exists(ex => SqlCompat.canHandle(spark, ex)) =>
-        // Exasol EXPORT … INTO CSV: table → CSV directory.
-        val exported =
-          SqlCompat.runExport(spark, SqlCompat.parseExport(stmt).get)
-        new QueryResult(stmt, None, Some(exported), None)
-      case _ if SqlCompat.parseParquetImport(stmt)
-          .exists(im => SqlCompat.canHandle(spark, im)) =>
-        // IMPORT … FROM PARQUET: typed columnar ingest (no quarantine —
-        // parquet rows can't be malformed), by-name column alignment.
-        val loaded = SqlCompat.runParquetImport(spark,
-          SqlCompat.parseParquetImport(stmt).get)
-        new QueryResult(stmt, None, Some(loaded), None)
-      case _ if SqlCompat.parseParquetExport(stmt)
-          .exists(ex => SqlCompat.canHandle(spark, ex)) =>
-        // EXPORT … INTO PARQUET: table/query → parquet directory.
-        val exported = SqlCompat.runParquetExport(spark,
-          SqlCompat.parseParquetExport(stmt).get)
-        new QueryResult(stmt, None, Some(exported), None)
       case _ if SqlCompat.handleConnectionDdl(stmt, durableCatalog) =>
         // CREATE/DROP CONNECTION: named JDBC endpoints for IMPORT/EXPORT.
         QueryResult.empty(stmt)
-      case _ if SqlCompat.parseJdbcImport(stmt)
-          .exists(im => SqlCompat.canHandle(spark, im)) =>
-        // Exasol IMPORT … FROM JDBC: external database → local table;
-        // each STATEMENT clause is its own parallel cursor. Cast
-        // failures ride the CSV lane's quarantine (+ ERRORS INTO /
-        // REJECT LIMIT).
-        val (loaded, bad) =
-          SqlCompat.runJdbcImport(spark, SqlCompat.parseJdbcImport(stmt).get)
-        if (bad > 0) log("WARNING", s"IMPORT quarantined $bad malformed row(s)")
-        new QueryResult(stmt, None, Some(loaded), None)
-      case _ if SqlCompat.parseJdbcExport(stmt)
-          .exists(ex => SqlCompat.canHandle(spark, ex)) =>
-        // Exasol EXPORT … INTO JDBC: table/query → external database.
-        val exported =
-          SqlCompat.runJdbcExport(spark, SqlCompat.parseJdbcExport(stmt).get)
-        new QueryResult(stmt, None, Some(exported), None)
-      case _ if SqlCompat.parseExecuteScript(stmt)
-          .exists(e => ScriptRegistry.lookup(e.name).isDefined) =>
+      case Emulated(s) =>
+        // UPDATE/DELETE/MERGE on parquet tables, the Exasol IMPORT/EXPORT
+        // loaders and ASOF JOIN, run by SqlCompat. rows_affected is the
+        // matched, loaded or exported row count, like the host engine's;
+        // rows an IMPORT quarantined are logged.
+        val out = s.run(spark)
+        if (out.quarantined > 0)
+          log("WARNING", s"IMPORT quarantined ${out.quarantined} malformed row(s)")
+        new QueryResult(stmt, out.df, out.rowsAffected, None)
+      case ScriptCall(e, sc) =>
         // B16 end-to-end: `EXECUTE SCRIPT name(args)` (RM:35-37, 69)
         // dispatches a registered EtlJob — a FRESH wrapper + job_log
         // registration, like the host engine spawning the script's own
         // session; the result is the finished job's messages table
         // (RETURNS TABLE analog). Shares this wrapper's log store and
         // clock, so script runs land in the same job_log.
-        val e = SqlCompat.parseExecuteScript(stmt).get
-        val sc = ScriptRegistry.lookup(e.name).get
         val df = EtlJob.execute(spark, logStore, e.name.replace("`", ""),
           sc.steps(e.args), sc.onError, clock)
-        val res = QueryResult.success(stmt, df, None)
-        res.normalizedRowCount
-        res
-      case _ if SqlCompat.parseAsOf(stmt)
-          .exists(q => SqlCompat.canHandle(spark, q)) =>
-        // ASOF [LEFT] JOIN dialect → the single-shuffle as-of operator.
-        val df = SqlCompat.runAsOf(spark, SqlCompat.parseAsOf(stmt).get)
-        val res = QueryResult.success(stmt, df, rowsAffectedOf(df))
-        res.normalizedRowCount
-        res
+        QueryResult.success(stmt, df, None)
       case _ =>
-        // Dialect translations, no-ops for Spark-native SQL:
-        // CONNECT BY hierarchical queries → recursive CTE, then
-        // PREFERRING skyline → NOT-EXISTS dominance, then
-        // GROUP_CONCAT → listagg, then the B10 Exasol datetime-format
-        // dialect (the reference's own
-        // TO_TIMESTAMP(?, 'YYYY-MM-DD HH24:MI:SS'), QW:98) → Spark
-        // patterns; TO_CHAR → date_format.
-        val translated = SqlCompat.translateDatetimeFormats(
-          SqlCompat.translateRatioToReport(
-          SqlCompat.translateGroupConcat {
-            val cb = SqlCompat.translateConnectBy(stmt).getOrElse(stmt)
-            val pf = SqlCompat.translatePreferring(cb).getOrElse(cb)
-            // QUALIFY (window-expression filter) → subquery spelling
-            val qf = SqlCompat.translateQualify(pf).getOrElse(pf)
-            // Oracle-compat ROWNUM filter → LIMIT (subquery-wrapped
-            // under ORDER BY: the host numbers rows BEFORE the sort);
-            // select-list ROWNUM numbering → ROW_NUMBER() OVER the
-            // statement's own ORDER BY
-            val rn = SqlCompat.translateRownum(qf).getOrElse(qf)
-            SqlCompat.translateSelectRownum(rn).getOrElse(rn)
-          }))
+        val translated = SqlCompat.translate(stmt)
         val referenced = Params.valueParamNames(translated)
         val args: Map[String, Any] = referenced.flatMap { name =>
           params.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => name -> v }
         }.toMap
         val df = if (args.isEmpty) spark.sql(translated)
                  else spark.sql(translated, args)
-        val res = QueryResult.success(stmt, df, rowsAffectedOf(df))
-        // Force the rowcount here so RUNTIME failures (not just analysis
-        // errors) hit the wrapper's error path — `pquery` materializes
-        // eagerly, so its failures are always query failures (QW:41).
-        // This is a distributed count: no rows cross to the driver.
-        res.normalizedRowCount
-        res
+        QueryResult.success(stmt, df, rowsAffectedOf(df))
     }
 
   /** `rows_affected` for wrapper-mediated DML: commands execute eagerly under

@@ -1,16 +1,20 @@
 package graft.wrapper
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Compatibility execution for SQL the host engine supports but Spark's
-  * parquet tables don't — currently `UPDATE t SET … [WHERE …]` (reference
-  * B4, the `finish()` UPDATE pattern QW:168–175 generalized to user
-  * tables).
+/** Compatibility execution for SQL the host engine supports but Spark
+  * does not run as written. [[classify]] picks the [[Statement]] this
+  * object emulates (UPDATE/DELETE/MERGE on parquet tables, the Exasol
+  * IMPORT/EXPORT loaders, ASOF JOIN); [[translate]] rewrites the rest of
+  * the Exasol dialect into Spark SQL.
   *
-  * Semantics: standard SQL — every SET expression is evaluated against the
-  * OLD row (so `SET a = b, b = a` swaps), WHERE gates the assignment
-  * per-row. Execution is read → transform → checkpoint to a temp location →
+  * `UPDATE t SET … [WHERE …]` (reference B4, the `finish()` UPDATE
+  * pattern QW:168–175 generalized to user tables) has standard SQL
+  * semantics: every SET expression is evaluated against the OLD row (so
+  * `SET a = b, b = a` swaps), WHERE gates the assignment per-row.
+  * Execution is read → transform → checkpoint to a temp location →
   * overwrite, which is exactly how an immutable-storage warehouse applies
   * an UPDATE; rows_affected is the matched-row count. On hive-partitioned
   * targets the read and the overwrite are PARTITION-SCOPED whenever the
@@ -19,11 +23,63 @@ import org.apache.spark.sql.functions._
   * or replaced. */
 object SqlCompat {
 
+  /** What an emulated statement did: a query result (ASOF), a
+    * rows-affected count (DML, IMPORT, EXPORT), and how many malformed
+    * input rows an IMPORT quarantined instead of loading. */
+  final case class Outcome(df: Option[DataFrame], rowsAffected: Option[Long],
+      quarantined: Long = 0L)
+
+  private def affected(n: Long): Outcome = Outcome(None, Some(n))
+
+  /** A parsed statement this object runs itself, because Spark cannot run
+    * it as written: DML on parquet tables, the Exasol IMPORT/EXPORT
+    * loaders and ASOF JOIN. */
+  sealed trait Statement {
+    /** Whether this engine can serve the statement as parsed — typically,
+      * whether the tables it names exist. */
+    def canHandle(spark: SparkSession): Boolean
+    def run(spark: SparkSession): Outcome
+  }
+
+  /** The parsers of the emulated statements, in dispatch order. */
+  private val parsers: Seq[String => Option[Statement]] = Seq(
+    parseUpdate, parseDelete, parseMerge, parseImport, parseFbvImport,
+    parseExport, parseParquetImport, parseParquetExport, parseJdbcImport,
+    parseJdbcExport, parseAsOf)
+
+  /** The first parse of `sql` that this engine can serve, running each
+    * parser at most once, in dispatch order. A statement that parses but
+    * cannot be handled (say, an UPDATE of a missing table) falls through
+    * to the next parser and, failing all, to `spark.sql` — which then
+    * reports the engine's own error. */
+  def classify(spark: SparkSession, sql: String): Option[Statement] =
+    parsers.iterator.flatMap(_(sql)).find(_.canHandle(spark))
+
+  /** The dialect translations, in order, each a no-op on Spark-native SQL:
+    * CONNECT BY hierarchical queries → recursive CTE, PREFERRING skyline →
+    * NOT-EXISTS dominance, QUALIFY → subquery, the Oracle-compat ROWNUM
+    * filter → LIMIT (subquery-wrapped under ORDER BY: the host numbers
+    * rows BEFORE the sort), select-list ROWNUM → ROW_NUMBER() over the
+    * statement's own ORDER BY, GROUP_CONCAT → listagg, RATIO_TO_REPORT →
+    * window ratio, then the B10 Exasol datetime-format dialect (the
+    * reference's own TO_TIMESTAMP(?, 'YYYY-MM-DD HH24:MI:SS'), QW:98) →
+    * Spark patterns, TO_CHAR → date_format. */
+  def translate(sql: String): String = {
+    val whole = Seq[String => Option[String]](translateConnectBy,
+      translatePreferring, translateQualify, translateRownum,
+      translateSelectRownum).foldLeft(sql)((s, t) => t(s).getOrElse(s))
+    translateDatetimeFormats(
+      translateRatioToReport(translateGroupConcat(whole)))
+  }
+
   private val UpdateHeadRe = "(?is)^\\s*update\\s+([\\w.`]+)\\s+set\\s".r
   private val WhereRe = "(?i)\\bwhere\\b".r
 
   final case class Update(table: String, assignments: Seq[(String, String)],
-      where: Option[String])
+      where: Option[String]) extends Statement {
+    def canHandle(spark: SparkSession): Boolean = tableExists(spark, table)
+    def run(spark: SparkSession): Outcome = affected(runUpdate(spark, this))
+  }
 
   /** A copy of `sql` (same length, so match offsets map 1:1) where string
     * literals, comments, and everything nested inside parentheses is blanked
@@ -125,7 +181,7 @@ object SqlCompat {
     * nightly UPDATE against a date-partitioned fact table. Unpartitioned
     * tables, and updates that move rows between partitions, take the
     * full-table checkpoint-overwrite. */
-  def runUpdate(spark: SparkSession, u: Update): Long = {
+  private def runUpdate(spark: SparkSession, u: Update): Long = {
     val df = spark.table(u.table)
     val cond = u.where.map(expr).getOrElse(lit(true))
     val pcols = partitionColsOf(spark, u.table)
@@ -299,10 +355,6 @@ object SqlCompat {
     true
   }
 
-  /** Whether the UPDATE target is a catalog table this path can serve. */
-  def canHandle(spark: SparkSession, u: Update): Boolean =
-    tableExists(spark, u.table)
-
   private def tableExists(spark: SparkSession, t: String): Boolean =
     scala.util.Try(spark.catalog.tableExists(t)).getOrElse(false)
 
@@ -311,6 +363,10 @@ object SqlCompat {
   private val DeleteHeadRe = "(?is)^\\s*delete\\s+from\\s+([\\w.`]+)\\s*".r
 
   final case class Delete(table: String, where: Option[String])
+      extends Statement {
+    def canHandle(spark: SparkSession): Boolean = tableExists(spark, table)
+    def run(spark: SparkSession): Outcome = affected(runDelete(spark, this))
+  }
 
   def parseDelete(sql: String): Option[Delete] = {
     val masked = maskNonTopLevel(sql)
@@ -322,9 +378,6 @@ object SqlCompat {
     }
   }
 
-  def canHandle(spark: SparkSession, d: Delete): Boolean =
-    tableExists(spark, d.table)
-
   /** DELETE FROM t [WHERE p] on a parquet catalog table: keep the
     * complement, checkpoint, overwrite. Returns the deleted-row count.
     *
@@ -332,7 +385,7 @@ object SqlCompat {
     * read and rewritten — unless a partition empties completely (dynamic
     * overwrite cannot clear a partition it writes no rows into), which
     * falls back to the full rewrite. */
-  def runDelete(spark: SparkSession, d: Delete): Long = {
+  private def runDelete(spark: SparkSession, d: Delete): Long = {
     val df = spark.table(d.table)
     val cond = d.where.map(expr).getOrElse(lit(true))
     val pcols = partitionColsOf(spark, d.table)
@@ -395,7 +448,9 @@ object SqlCompat {
   final case class CsvImport(table: String, paths: Seq[String], sep: String,
       skip: Int, encoding: String, nullValue: Option[String],
       rowSep: Option[String], rejectLimit: Option[Long],
-      errorsInto: Option[String] = None) {
+      errorsInto: Option[String] = None) extends Statement {
+    def canHandle(spark: SparkSession): Boolean = tableExists(spark, table)
+    def run(spark: SparkSession): Outcome = runImport(spark, this)
     /** SKIP = 1 is the header-row case — let the CSV reader consume it. */
     def header: Boolean = skip == 1
     def path: String = paths.head
@@ -413,6 +468,15 @@ object SqlCompat {
   final case class CsvExport(source: Either[String, String], path: String,
       sep: String, replace: Boolean,
       withColumnNames: Boolean) // Left = table name, Right = subquery text
+      extends Statement {
+    def canHandle(spark: SparkSession): Boolean = sourceExists(spark, source)
+    /** Header only WITH COLUMN NAMES; an existing target path fails
+      * unless REPLACE (both the host engine's file-export semantics). */
+    def run(spark: SparkSession): Outcome = exportRows(spark, source)(
+      _.mode(if (replace) "overwrite" else "errorifexists")
+        .option("header", withColumnNames.toString)
+        .option("sep", sep).csv(path))
+  }
 
   /** Exasol `IMPORT INTO t FROM [LOCAL] CSV FILE 'path' [FILE 'path2' …]
     * [COLUMN SEPARATOR = ','] [SKIP = n] [ENCODING = '…'] [NULL = '…']
@@ -547,10 +611,9 @@ object SqlCompat {
     sb.result()
   }
 
-  def canHandle(spark: SparkSession, i: CsvImport): Boolean =
-    tableExists(spark, i.table)
-
-  def canHandle(spark: SparkSession, e: CsvExport): Boolean = e.source match {
+  /** Whether an EXPORT source — a table name, or a query — resolves. */
+  private def sourceExists(spark: SparkSession,
+      source: Either[String, String]): Boolean = source match {
     case Left(table) => tableExists(spark, table)
     case Right(query) =>
       // Accept only a pure query — `spark.sql` on a COMMAND would EXECUTE
@@ -561,6 +624,17 @@ object SqlCompat {
       // then run `spark.sql`, which for a pure query is analysis-only
       // (lazy) and validates resolution without running anything.
       isPureQuery(spark, query)
+  }
+
+  /** Count an EXPORT source, then hand its writer to `write` (the CSV,
+    * PARQUET and JDBC lanes differ only there); rows_affected is the
+    * exported row count. */
+  private def exportRows(spark: SparkSession, source: Either[String, String])(
+      write: DataFrameWriter[Row] => Unit): Outcome = {
+    val df = source.fold(spark.table, spark.sql)
+    val n = df.count()
+    write(df.write)
+    affected(n)
   }
 
   /** True iff `sql` parses to a plan with no command node anywhere AND
@@ -584,8 +658,8 @@ object SqlCompat {
   /** Append the CSV files' schema-conforming rows to the table; malformed
     * rows quarantine (logged by the caller via the returned counts), except
     * past an explicit REJECT LIMIT, where the statement fails before any
-    * write. Returns (loaded, quarantined). */
-  def runImport(spark: SparkSession, i: CsvImport): (Long, Long) = {
+    * write. */
+  private def runImport(spark: SparkSession, i: CsvImport): Outcome = {
     val schema = spark.table(i.table).schema
     val res =
       if (i.skip > 1) {
@@ -613,7 +687,7 @@ object SqlCompat {
           res.quarantined.write.mode("append").insertInto(et)
       }
       res.good.write.mode("append").insertInto(i.table)
-      (loaded, bad)
+      Outcome(None, Some(loaded), bad)
     } finally res.unpersist()
   }
 
@@ -628,7 +702,11 @@ object SqlCompat {
   private val FbvSizeRe = "(?is)size\\s*=\\s*(\\d+)".r
 
   final case class FbvImport(table: String, path: String, sizes: Seq[Int],
-      rejectLimit: Option[Long])
+      rejectLimit: Option[Long]) extends Statement {
+    def canHandle(spark: SparkSession): Boolean = tableExists(spark, table) &&
+      sizes.length == spark.table(table).schema.length
+    def run(spark: SparkSession): Outcome = runFbvImport(spark, this)
+  }
 
   /** `IMPORT INTO t FROM [LOCAL] FBV FILE 'path' (SIZE=n, SIZE=m, …)
     * [REJECT LIMIT …]` — one SIZE per target column, in order. */
@@ -648,16 +726,12 @@ object SqlCompat {
         }))
     }
 
-  def canHandle(spark: SparkSession, f: FbvImport): Boolean =
-    tableExists(spark, f.table) &&
-      f.sizes.length == spark.table(f.table).schema.length
-
   /** Fixed-width ingest with the same quarantine lane as CSV: a line of
     * the wrong total length, or a non-blank field that fails its column's
     * cast, quarantines the raw line (or fails the statement past an
     * explicit REJECT LIMIT). Blank (all-space) fields are NULL. Pure
     * line-parallel projection — splits scale like any text scan. */
-  def runFbvImport(spark: SparkSession, f: FbvImport): (Long, Long) = {
+  private def runFbvImport(spark: SparkSession, f: FbvImport): Outcome = {
     val schema = spark.table(f.table).schema
     val offsets = f.sizes.scanLeft(1)(_ + _) // substring() is 1-based
     val total = f.sizes.sum
@@ -685,20 +759,8 @@ object SqlCompat {
           s"IMPORT: $nBad malformed row(s) exceed REJECT LIMIT $cap")
       }
       good.write.mode("append").insertInto(f.table)
-      (loaded, nBad)
+      Outcome(None, Some(loaded), nBad)
     } finally { parsed.unpersist(); () }
-  }
-
-  /** Write the table/query result as a CSV directory. Header only WITH
-    * COLUMN NAMES; an existing target path fails unless REPLACE (both the
-    * host engine's file-export semantics). Returns the exported row count. */
-  def runExport(spark: SparkSession, e: CsvExport): Long = {
-    val df = e.source.fold(spark.table, spark.sql)
-    val n = df.count()
-    df.write.mode(if (e.replace) "overwrite" else "errorifexists")
-      .option("header", e.withColumnNames.toString)
-      .option("sep", e.sep).csv(e.path)
-    n
   }
 
   // ---------------------------------------------- IMPORT/EXPORT via PARQUET
@@ -720,8 +782,16 @@ object SqlCompat {
       "file\\s+'([^']*)'(.*?)\\s*;?\\s*$").r
 
   final case class ParquetImport(table: String, paths: Seq[String])
+      extends Statement {
+    def canHandle(spark: SparkSession): Boolean = tableExists(spark, table)
+    def run(spark: SparkSession): Outcome = runParquetImport(spark, this)
+  }
   final case class ParquetExport(source: Either[String, String],
-      path: String, replace: Boolean)
+      path: String, replace: Boolean) extends Statement {
+    def canHandle(spark: SparkSession): Boolean = sourceExists(spark, source)
+    def run(spark: SparkSession): Outcome = exportRows(spark, source)(
+      _.mode(if (replace) "overwrite" else "errorifexists").parquet(path))
+  }
 
   def parseParquetImport(sql: String): Option[ParquetImport] =
     ParquetImportRe.findFirstMatchIn(maskOptions(sql)).map { m =>
@@ -746,31 +816,14 @@ object SqlCompat {
         replace = ReplaceOptRe.findFirstIn(opts).isDefined)
     }
 
-  def canHandle(spark: SparkSession, i: ParquetImport): Boolean =
-    tableExists(spark, i.table)
-
-  def canHandle(spark: SparkSession, e: ParquetExport): Boolean =
-    e.source match {
-      case Left(table) => tableExists(spark, table)
-      case Right(query) => isPureQuery(spark, query)
-    }
-
-  def runParquetImport(spark: SparkSession, i: ParquetImport): Long = {
+  private def runParquetImport(spark: SparkSession, i: ParquetImport): Outcome = {
     val target = spark.table(i.table).schema
     val src = spark.read.parquet(i.paths: _*)
     val aligned = src.select(target.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
     val n = aligned.count()
     aligned.write.mode("append").insertInto(i.table)
-    n
-  }
-
-  def runParquetExport(spark: SparkSession, e: ParquetExport): Long = {
-    val df = e.source.fold(spark.table, spark.sql)
-    val n = df.count()
-    df.write.mode(if (e.replace) "overwrite" else "errorifexists")
-      .parquet(e.path)
-    n
+    affected(n)
   }
 
   // ------------------------------------------------- IMPORT/EXPORT via JDBC
@@ -881,8 +934,19 @@ object SqlCompat {
   final case class JdbcImport(table: String, at: JdbcEndpoint,
       source: Either[String, Seq[String]], // Left = remote table, Right = STATEMENTs
       rejectLimit: Option[Long] = None, errorsInto: Option[String] = None)
+      extends Statement {
+    def canHandle(spark: SparkSession): Boolean = tableExists(spark, table)
+    def run(spark: SparkSession): Outcome = runJdbcImport(spark, this)
+  }
   final case class JdbcExport(source: Either[String, String], // table | query
       at: JdbcEndpoint, target: String, replace: Boolean, truncate: Boolean)
+      extends Statement {
+    def canHandle(spark: SparkSession): Boolean = sourceExists(spark, source)
+    def run(spark: SparkSession): Outcome = exportRows(spark, source)(
+      _.mode(if (replace || truncate) "overwrite" else "append")
+        .option("truncate", truncate.toString) // TRUNCATE keeps remote DDL
+        .jdbc(at.url, target, at.properties))
+  }
 
   private def endpoint(urlLit: String, connName: String, opts: String):
       Option[JdbcEndpoint] = {
@@ -954,14 +1018,6 @@ object SqlCompat {
       }
     }
 
-  def canHandle(spark: SparkSession, i: JdbcImport): Boolean =
-    tableExists(spark, i.table)
-
-  def canHandle(spark: SparkSession, e: JdbcExport): Boolean = e.source match {
-    case Left(table) => tableExists(spark, table)
-    case Right(query) => isPureQuery(spark, query)
-  }
-
   /** Append the remote rows to the local table. Columns map by POSITION with
     * a cast to the target type — the host loader's rule. Multiple STATEMENT
     * cursors read concurrently (one jdbc partition each) and union.
@@ -971,9 +1027,8 @@ object SqlCompat {
     * whole source row JSON-serialized as `raw_record`) instead of failing
     * the scan under ANSI cast; an explicit `REJECT LIMIT n` fails the
     * statement BEFORE any write once exceeded, and `ERRORS INTO t` lands
-    * the quarantined rows in an errors table created on first use.
-    * Returns (loaded, quarantined). */
-  def runJdbcImport(spark: SparkSession, i: JdbcImport): (Long, Long) = {
+    * the quarantined rows in an errors table created on first use. */
+  private def runJdbcImport(spark: SparkSession, i: JdbcImport): Outcome = {
     val target = spark.table(i.table).schema
     val df = i.source match {
       case Left(remote) =>
@@ -1018,19 +1073,8 @@ object SqlCompat {
           quarantined.write.mode("append").insertInto(et)
       }
       good.write.mode("append").insertInto(i.table)
-      (loaded, bad)
+      Outcome(None, Some(loaded), bad)
     } finally { parsed.unpersist(); () }
-  }
-
-  /** Write the table/query to the remote table via df.write.jdbc. */
-  def runJdbcExport(spark: SparkSession, e: JdbcExport): Long = {
-    val df = e.source.fold(spark.table, spark.sql)
-    val n = df.count()
-    val mode = if (e.replace || e.truncate) "overwrite" else "append"
-    df.write.mode(mode)
-      .option("truncate", e.truncate.toString) // TRUNCATE keeps remote DDL
-      .jdbc(e.at.url, e.target, e.at.properties)
-    n
   }
 
   // -------------------------------------------------------- EXECUTE SCRIPT
@@ -1063,6 +1107,12 @@ object SqlCompat {
         else splitTopLevel(sql.substring(m.start(2), m.end(2)))
       ExecScript(name, raw)
     }
+
+  /** The registered script an `EXECUTE SCRIPT` statement calls, if any. */
+  private[wrapper] def scriptCall(sql: String)
+      : Option[(ExecScript, ScriptRegistry.Script)] =
+    parseExecuteScript(sql).flatMap(e =>
+      ScriptRegistry.lookup(e.name).map(e -> _))
 
   private def parseScriptArg(raw: String): Any = {
     val t = raw.trim
@@ -1122,7 +1172,7 @@ object SqlCompat {
     * QueryWrapper *is* the Lua wrapper's re-implementation, so executing
     * a Lua body raises a clear error instead of silently doing nothing
     * (divergence documented in SURVEY §2B B16). */
-  private def scriptSteps(cs: CreateScript)
+  private[wrapper] def scriptSteps(cs: CreateScript)
       : Seq[Any] => Seq[(String, QueryWrapper => Any)] = {
     if (cs.lua)
       _ => throw new UnsupportedOperationException(
@@ -1149,12 +1199,6 @@ object SqlCompat {
       }
     }
   }
-
-  /** Re-binding entry for [[DurableCatalog.rehydrate]]: build the step
-    * function for a stored (re-parsed) CREATE SCRIPT — the SAME
-    * interpretation path live DDL takes. */
-  private[wrapper] def scriptStepsFor(cs: CreateScript)
-      : Seq[Any] => Seq[(String, QueryWrapper => Any)] = scriptSteps(cs)
 
   /** Handle CREATE/DROP SCRIPT DDL against [[ScriptRegistry]]; returns
     * true iff the statement was one. Without OR REPLACE an existing name
@@ -1428,7 +1472,15 @@ object SqlCompat {
       leftAlias: String, rightTable: String, rightAlias: String,
       leftJoin: Boolean, keys: Seq[(String, String)], leftTime: String,
       rightTime: String, forward: Boolean, tail: String,
-      ctes: Seq[(String, String)] = Seq.empty)
+      ctes: Seq[(String, String)] = Seq.empty) extends Statement {
+    def canHandle(spark: SparkSession): Boolean = {
+      def resolvable(n: String) =
+        ctes.exists(_._1.equalsIgnoreCase(n)) || tableExists(spark, n)
+      resolvable(leftTable) && resolvable(rightTable) && keys.nonEmpty
+    }
+    def run(spark: SparkSession): Outcome =
+      Outcome(Some(runAsOf(spark, this)), None)
+  }
 
   private val WithHeadRe = "(?is)^\\s*with\\s+".r
   private val CteNameAsRe = "(?is)^\\s*([\\w`]+)\\s+as\\s*\\(".r
@@ -1529,16 +1581,10 @@ object SqlCompat {
     }
   }
 
-  def canHandle(spark: SparkSession, q: AsOfQuery): Boolean = {
-    def resolvable(n: String) =
-      q.ctes.exists(_._1.equalsIgnoreCase(n)) || tableExists(spark, n)
-    resolvable(q.leftTable) && resolvable(q.rightTable) && q.keys.nonEmpty
-  }
-
   /** Execute a parsed ASOF query: rename the right side into a collision-free
     * namespace, run the union+window as-of, then evaluate the SELECT list /
     * tail SQL over the joined view with alias-qualified refs rewritten. */
-  def runAsOf(spark: SparkSession, q: AsOfQuery): DataFrame = {
+  private def runAsOf(spark: SparkSession, q: AsOfQuery): DataFrame = {
     // A side naming a CTE resolves by running the full prologue against
     // that name — no temp-view state, analysis resolves eagerly, and
     // earlier CTEs are in scope for later ones exactly as written.
@@ -1919,7 +1965,12 @@ object SqlCompat {
       source: String, sourceAlias: String,
       condition: String,
       clauses: Seq[MergeClause],
-      sourceIsQuery: Boolean = false) {
+      sourceIsQuery: Boolean = false) extends Statement {
+    def canHandle(spark: SparkSession): Boolean =
+      tableExists(spark, target) && (
+        if (sourceIsQuery) isPureQuery(spark, source)
+        else scala.util.Try(spark.table(source)).isSuccess)
+    def run(spark: SparkSession): Outcome = affected(runMerge(spark, this))
     // Convenience views of the (common) single-unconditional-clause shape.
     def matchedSet: Option[Seq[(String, String)]] =
       clauses.collectFirst { case MatchedUpdate(_, a) => a }
@@ -1991,11 +2042,6 @@ object SqlCompat {
     }
   }
 
-  def canHandle(spark: SparkSession, m: Merge): Boolean =
-    tableExists(spark, m.target) && (
-      if (m.sourceIsQuery) isPureQuery(spark, m.source)
-      else scala.util.Try(spark.table(m.source)).isSuccess)
-
   /** Execute MERGE in ONE join pass: full-outer target⋈source on the match
     * condition; matched rows take the first applicable WHEN MATCHED clause
     * (UPDATE with old-row semantics, or DELETE), target-only rows and
@@ -2019,7 +2065,7 @@ object SqlCompat {
     * into it, the merge reads and rewrites ONLY the partitions named by the
     * source's values — the nightly-MERGE-into-3-of-3000-date-partitions
     * shape. Anything else takes the full-table path. */
-  def runMerge(spark: SparkSession, m: Merge): Long = {
+  private def runMerge(spark: SparkSession, m: Merge): Long = {
     val pcols = partitionColsOf(spark, m.target)
     val prune =
       if (pcols.isEmpty) None

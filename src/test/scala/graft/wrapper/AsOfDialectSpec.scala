@@ -85,9 +85,9 @@ class AsOfDialectSpec extends AnyFunSuite with SparkTestBase {
   test("the dialect plan is the union+window shape, not a nested loop") {
     setup()
     try {
-      val df = SqlCompat.runAsOf(spark, SqlCompat.parseAsOf(
+      val df = SqlCompat.parseAsOf(
         "SELECT a.t, b.px FROM ao_trades a ASOF JOIN ao_quotes b " +
-          "ON a.sym = b.sym AND a.t >= b.qt").get)
+          "ON a.sym = b.sym AND a.t >= b.qt").get.run(spark).df.get
       val physical = df.queryExecution.executedPlan.toString
       assert(!physical.contains("BroadcastNestedLoopJoin"))
       assert(!physical.contains("CartesianProduct"))

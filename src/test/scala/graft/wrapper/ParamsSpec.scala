@@ -67,51 +67,12 @@ class ParamsSpec extends AnyFunSuite {
     assert(res.dataFrame.get.collect().head.getLong(0) == 3L)
   }
 
-  test("nativeIdentifiers rewrites ::NAME to IDENTIFIER(:__graft_idN)") {
-    val (sql, extra) = Params.nativeIdentifiers(
-      "SELECT * FROM ::TAB WHERE x = :v", Map("TAB" -> "events", "v" -> 1))
-    assert(sql == "SELECT * FROM IDENTIFIER(:__graft_id0) WHERE x = :v")
-    assert(extra == Map("__graft_id0" -> "events"))
-  }
-
-  test("nativeIdentifiers fuses dotted ::SCH.::TAB runs into ONE clause") {
-    val (sql, extra) = Params.nativeIdentifiers(
-      "SELECT COUNT(*) FROM ::SCH.::TAB",
-      Map("SCH" -> "etl", "TAB" -> "job log"))
-    assert(sql == "SELECT COUNT(*) FROM IDENTIFIER(:__graft_id0)")
-    // unsafe parts are backtick-quoted INSIDE the bound name — the parser
-    // resolves the nesting, which is the point of the native clause
-    assert(extra == Map("__graft_id0" -> "etl.`job log`"))
-  }
-
-  test("nativeIdentifiers keeps the text splice for mixed partial names") {
-    val (sql1, extra1) = Params.nativeIdentifiers(
-      "SELECT ::C FROM sch.::TAB", Map("C" -> "x", "TAB" -> "t"))
-    assert(sql1 == "SELECT IDENTIFIER(:__graft_id0) FROM sch.t")
-    assert(extra1 == Map("__graft_id0" -> "x"))
-    val (sql2, extra2) = Params.nativeIdentifiers(
-      "SELECT 1 FROM ::SCH.tab", Map("SCH" -> "s"))
-    assert(sql2 == "SELECT 1 FROM s.tab")
-    assert(extra2.isEmpty)
-  }
-
-  test("nativeIdentifiers leaves literals/comments untouched and raises on unbound") {
-    val sql = "SELECT '::note' FROM t -- ::x"
-    assert(Params.nativeIdentifiers(sql, Map.empty) == (sql, Map.empty))
-    val e = intercept[IllegalArgumentException] {
-      Params.nativeIdentifiers("SELECT * FROM ::NOPE", Map.empty)
-    }
-    assert(e.getMessage.contains("::NOPE"))
-  }
-
-  test("identifierBinding=native drives ::TAB through the parser end-to-end") {
+  test("::TAB splice backtick-quotes a spaced name through wrapper.query") {
     val spark = graft.SparkTestBase.spark
     spark.sql(
       "CREATE OR REPLACE TEMP VIEW `native id t` AS SELECT id AS n FROM RANGE(4)")
     val w = QueryWrapper(spark)
-    w.identifierBinding = "native"
-    // a name needing quoting: the splice would inline backticks; native
-    // mode hands the quoted name to the parser as a bound constant
+    // a name needing quoting: the splice inlines it backtick-quoted
     val (ok, res) = w.query("SELECT count(*) AS c FROM ::T",
       QueryOptions(params = Some(Map("T" -> "native id t"))))
     assert(ok, res.errorMessage)

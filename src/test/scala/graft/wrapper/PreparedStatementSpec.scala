@@ -107,6 +107,46 @@ class PreparedStatementSpec extends AnyFunSuite with SparkTestBase {
     assert(results.map(_.rows.head.getLong(0)) == Vector(2L, 4L))
   }
 
+  test("executeBatch failure reports the SQLSTATE, like query") {
+    val loc = Files.createTempDirectory("ps_err").toString
+    spark.sql(s"CREATE TABLE pse_t (a BIGINT, b STRING) USING parquet LOCATION '$loc/t'")
+    try {
+      val w = QueryWrapper(spark)
+      w.onError = "continue"
+      val ps = w.prepare("INSERT INTO pse_t VALUES (?, ?)")
+      val before = w.messages.length
+      // 'abc' cannot cast to BIGINT: CAST_INVALID_INPUT under ANSI mode
+      val (ok, results) = ps.executeBatch(Seq(Seq(1L, "x"), Seq("abc", "y")))
+      assert(!ok)
+      assert(results.length == 1)
+      assert(results.head.errorCode == "22018", results.head.errorMessage)
+      assert(results.head.errorMessage.contains("CAST_INVALID_INPUT"))
+      assert(w.messages.drop(before).map(_.msgType) == Seq("INFO", "ERROR"))
+      assert(w.errors == 1)
+      assert(spark.table("pse_t").count() == 0L) // the batch fails whole
+    } finally spark.sql("DROP TABLE IF EXISTS pse_t")
+  }
+
+  test("executeBatch success logging follows verbosity, like query") {
+    val loc = Files.createTempDirectory("ps_verb").toString
+    spark.sql(s"CREATE TABLE psv_t (a BIGINT) USING parquet LOCATION '$loc/t'")
+    try {
+      val w = QueryWrapper(spark)
+      val ps = w.prepare("INSERT INTO psv_t VALUES (?)")
+      w.verbosity = 1
+      val n1 = w.messages.length
+      assert(ps.executeBatch(Seq(Seq(1L), Seq(2L)))._1)
+      assert(w.messages.length == n1) // < 2: silent
+      w.verbosity = 3
+      assert(ps.executeBatch(Seq(Seq(3L)))._1)
+      val last = w.messages.last
+      assert(last.msgType == "DEBUG")
+      assert(last.message == "batch insert: INSERT INTO psv_t VALUES (:PS_VAL_1)")
+      assert(last.rowcount.contains(1L))
+      assert(spark.table("psv_t").count() == 3L)
+    } finally spark.sql("DROP TABLE IF EXISTS psv_t")
+  }
+
   test("queryRows: field access by name and 1-based index (QW:356-361)") {
     spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
       .createOrReplaceTempView("nation_it")

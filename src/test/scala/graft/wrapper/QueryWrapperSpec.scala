@@ -105,6 +105,26 @@ class QueryWrapperSpec extends AnyFunSuite with SparkTestBase {
     assert(levels.contains("ERROR"))
   }
 
+  test("a statement that parses but cannot be emulated reaches spark.sql") {
+    val w = mem()
+    w.onError = "continue"
+    val update = "UPDATE no_such_table SET a = 1"
+    val imprt = "IMPORT INTO no_such_table FROM LOCAL CSV FILE '/no/such/file.csv'"
+    assert(SqlCompat.parseUpdate(update).isDefined)
+    assert(SqlCompat.parseImport(imprt).isDefined)
+    assert(SqlCompat.classify(spark, update).isEmpty)
+    assert(SqlCompat.classify(spark, imprt).isEmpty)
+    // Spark's own errors, not an emulation's
+    val (ok1, res1) = w.query(update)
+    assert(!ok1)
+    assert(res1.errorCode == "42P01", res1.errorMessage)
+    assert(res1.errorMessage.contains("TABLE_OR_VIEW_NOT_FOUND"))
+    val (ok2, res2) = w.query(imprt)
+    assert(!ok2)
+    assert(res2.errorCode == "42601", res2.errorMessage)
+    assert(res2.errorMessage.contains("PARSE_SYNTAX_ERROR"))
+  }
+
   // ----------------------------------------------------------- logging (A5)
 
   test("log level >10 chars truncates to first 7 + '...'") {
